@@ -17,26 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ocdb_server_spark.registry import load_all
 
-# One fold per process: load_all() re-reads every CORRECTNESS_r*.json
-# plus the fingerprint books and re-sorts the registry — identical
-# results within a driver run, and the driver calls entry(), then
-# queries(), then oracle_sql() (round-13 review: three full folds of
-# I/O+hashing that grow with every round's new evidence file).
-_OPS: dict | None = None
-
-
-def _ops() -> dict:
-    global _OPS
-    if _OPS is None:
-        _OPS = load_all()
-    return _OPS
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the TPC-H Q5-shaped
     6-table star join (op39) — scan + broadcast joins + agg + exact
     decimal revenue."""
-    return _ops()["op39_join_multiway_star"].fn(spark, "/root/testdata/sf0.001")
+    return load_all()["op39_join_multiway_star"].fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -52,7 +38,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     SPARK_GRAFT_OP90_PLANT env setting wins in either direction."""
     from ocdb_server_spark.operators.pipeline_ext import op90_gate_planted
 
-    q = {name: op.fn for name, op in _ops().items()}
+    q = {name: op.fn for name, op in load_all().items()}
     q["op90_embedding_neardup_lsh"] = op90_gate_planted
     return q
 
@@ -61,4 +47,4 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent ANSI SQL for every hash-checked operator;
     ROWS-only ops (approx/nondeterministic/non-SQL semantics) are
     omitted by design — see SURVEY.md §2's oracle legend."""
-    return {name: op.oracle for name, op in _ops().items() if op.oracle is not None}
+    return {name: op.oracle for name, op in load_all().items() if op.oracle is not None}

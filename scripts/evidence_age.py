@@ -5,40 +5,26 @@ Round-6 verdict item 7: the judge and the builder kept re-deriving
 "which ops carry stale driver evidence" from six CORRECTNESS_r*.json
 files. This table states it once per round: for every registered op,
 the round of its LATEST green driver row (same green semantics as
-registry._row_is_green — the sweep-order source of truth), its oracle
-kind, and the age histogram on top.
+sweep_order._row_is_green — the sweep-order source of truth), its
+oracle kind, and the age histogram on top.
 
 Usage: python scripts/evidence_age.py > EVIDENCE_AGE.md
 """
 
 from __future__ import annotations
 
-import os
-import sys
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from ocdb_server_spark.registry import (  # noqa: E402
-    certified_rounds,
-    load_all,
-)
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def latest_green() -> dict[str, int]:
-    """{op: round of latest green row}. The fold (incl. the r9
-    oracle-upgrade demotion: a SQL-oracled op whose latest green was
-    a rows-only row counts as r0 — the hash gate never ran) lives in
-    registry.certified_rounds, SHARED with _sweep_order so the sweep
-    and this report can't disagree (round-8 review)."""
-    return certified_rounds(ROOT)
+from sweep_order import ROOT, certified_rounds, load_all
 
 
 def main() -> None:
+    # The fold (incl. the r9 oracle-upgrade demotion: a SQL-oracled op
+    # whose latest green was a rows-only row counts as r0 — the hash
+    # gate never ran) is sweep_order.certified_rounds, SHARED with the
+    # sweep order so the sweep and this report can't disagree.
     ops = load_all()
-    certified = latest_green()
+    certified = certified_rounds(ROOT, ops)
     hist = Counter(certified.get(name, 0) for name in ops)
     print("# EVIDENCE_AGE — per-op latest-green driver round")
     print()
@@ -48,7 +34,7 @@ def main() -> None:
     print("yet: new this round, latest row failed, or the op's oracle was")
     print("upgraded since its last rows-only green (the r9 demotion rule —")
     print("the hash gate has never run for it). The sweep order")
-    print("(registry._sweep_order) certifies r0 first, then stalest round.")
+    print("(scripts/sweep_order.py) certifies r0 first, then stalest round.")
     print()
     print("Histogram (round → ops whose latest green evidence is that round):")
     parts = [f"r{r}: {n}" for r, n in sorted(hist.items())]

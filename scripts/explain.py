@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Capture `.explain("formatted")` for named ops into plans/r19/.
+"""Capture `.explain("formatted")` for named ops into a plans directory.
 
-Usage: python scripts/explain_r19.py <suffix> op17_agg_groupby [op42_...]
-Writes plans/r19/<op>_<suffix>.txt for each op (suffix: before/after).
+Usage: python scripts/explain.py --out plans/rNN <suffix> op17_agg_groupby [op42_...]
+Writes <out>/<op>_<suffix>.txt for each op (suffix: before/after).
 Captured on the bench session (interactive profile, warm sf0.1 cache)
 so the plans match what bench.py actually executes.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -16,29 +17,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True, help="output directory, e.g. plans/r20")
+    ap.add_argument("suffix", help="file suffix, e.g. before/after")
+    ap.add_argument("names", nargs="+", help="op keys")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from ocdb_server_spark.io import warm_cache
     from ocdb_server_spark.registry import load_all
     from ocdb_server_spark.session import get_spark
 
-    spark = get_spark(app_name="explain_r19", profile="interactive")
+    spark = get_spark(app_name="explain", profile="interactive")
     spark.sparkContext.setLogLevel("ERROR")
     ops = load_all()
     warm_cache(spark, sf_dir)
 
-    dest_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r19"
-    )
-    os.makedirs(dest_dir, exist_ok=True)
-    for name in names:
+    os.makedirs(args.out, exist_ok=True)
+    for name in args.names:
         df = ops[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(dest_dir, f"{name}_{suffix}.txt")
+        path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")

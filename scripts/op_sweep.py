@@ -1,21 +1,24 @@
 #!/usr/bin/env python
-"""Round-18 optimization baseline: wall-time every registered operator
-at sf0.1 under the bench methodology (warm cache, interactive profile,
-noop sink per the optimization guide §1.4 — times the computation of
-every column of every row, not the sink).
+"""Optimization sweep: wall-time every registered operator at sf0.1
+under the bench methodology (warm cache, interactive profile, noop sink
+per the optimization guide §1.4 — times the computation of every column
+of every row, not the sink).
 
 Each rep builds a FRESH DataFrame (new shuffle deps — re-executing one
 instance skips finished map stages, the round-8 bench correction) and
-times one noop write. best/median of N reps plus the build time are
-emitted as JSON so before/after comparisons in OPTIMIZATION_r18.md are
-reproducible.
+times one noop write. Ops whose warm-up run exceeds 0.3 s get best-of-5
+instead of best-of-N, so loaded draws on the expensive ops don't
+masquerade as regressions. best/median of the reps plus the build time
+are emitted as JSON so before/after comparisons are reproducible.
 
-Usage: python scripts/op_sweep_r18.py [sf_dir] [reps] [--only=opA,opB]
-Writes: plans/r18/op_sweep_<tag>.json (tag from argv, default 'base')
+Usage: python scripts/op_sweep.py --out plans/rNN [--sf-dir DIR]
+           [--reps N] [--tag TAG] [--only opA,opB]
+Writes: <out>/op_sweep_<tag>.json
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -23,25 +26,28 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+SLOW_OP_SEC = 0.3  # warm-up wall above this buys extra reps
+SLOW_OP_REPS = 5
+
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.1"
-    reps = int(args[1]) if len(args) > 1 else 3
-    tag = next((a.split("=", 1)[1] for a in sys.argv if a.startswith("--tag=")), "base")
-    only = next(
-        (a.split("=", 1)[1].split(",") for a in sys.argv if a.startswith("--only=")),
-        None,
-    )
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out", required=True, help="output directory, e.g. plans/r20")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--tag", default="base")
+    ap.add_argument("--only", help="comma-separated op keys")
+    args = ap.parse_args()
+    only = args.only.split(",") if args.only else None
 
     from ocdb_server_spark.io import warm_cache
     from ocdb_server_spark.registry import load_all
     from ocdb_server_spark.session import get_spark
 
-    spark = get_spark(app_name="op_sweep_r18", profile="interactive")
+    spark = get_spark(app_name="op_sweep", profile="interactive")
     spark.sparkContext.setLogLevel("ERROR")
     ops = load_all()
-    warm_cache(spark, sf_dir)
+    warm_cache(spark, args.sf_dir)
 
     out: dict[str, dict] = {}
     names = [n for n in sorted(ops) if only is None or n in only]
@@ -50,12 +56,16 @@ def main() -> None:
         rec: dict[str, object] = {}
         try:
             # warm-up build+run (codegen/JIT/Arrow caches out of the numbers)
-            df = ops[name].fn(spark, sf_dir)
+            t0 = time.perf_counter()
+            df = ops[name].fn(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
+            warm_wall = time.perf_counter() - t0
+            slow = warm_wall > SLOW_OP_SEC
+            n_reps = max(args.reps, SLOW_OP_REPS) if slow else args.reps
             builds, runs = [], []
-            for _ in range(reps):
+            for _ in range(n_reps):
                 t0 = time.perf_counter()
-                df = ops[name].fn(spark, sf_dir)  # fresh shuffle deps
+                df = ops[name].fn(spark, args.sf_dir)  # fresh shuffle deps
                 t1 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
                 t2 = time.perf_counter()
@@ -66,19 +76,15 @@ def main() -> None:
             rec["best"] = round(runs[0], 4)
             rec["median"] = round(runs[len(runs) // 2], 4)
             rec["build"] = round(builds[0], 4)
+            rec["reps"] = n_reps
         except Exception as e:  # noqa: BLE001 — record, keep sweeping
             rec["err"] = f"{type(e).__name__}: {e}"[:200]
         out[name] = rec
         print(f"[{i + 1}/{len(names)}] {name}: {rec}", flush=True)
         spark.sparkContext.setJobDescription(None)
 
-    dest = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r18",
-        f"op_sweep_{tag}.json",
-    )
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    os.makedirs(args.out, exist_ok=True)
+    dest = os.path.join(args.out, f"op_sweep_{args.tag}.json")
     with open(dest, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     timed = {k: v["best"] for k, v in out.items() if "best" in v}

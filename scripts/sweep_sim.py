@@ -19,8 +19,9 @@ outliers can be fixed before the real gate runs.
 Usage: python scripts/sweep_sim.py [sf_dir] [--dump-costs]
 
 --dump-costs writes the measured per-op seconds to
-ocdb_server_spark/op_costs.json, which registry._sweep_order uses to
-run never-certified ops cheapest-first inside the driver's budget.
+ocdb_server_spark/op_costs.json, which scripts/sweep_order.py uses to
+run never-certified ops cheapest-first inside the sweep budget
+(re-run it after a dump to refresh ocdb_server_spark/op_order.json).
 """
 
 from __future__ import annotations
@@ -109,7 +110,7 @@ def main() -> None:
     if dump_costs:
         import json
 
-        # Guardrails (round-3 ADVICE): costs drive the registry's
+        # Guardrails (round-3 ADVICE): costs drive the
         # sweep order, which assumes sf0.01 wall seconds. Refuse to
         # overwrite with timings measured at another scale factor, and
         # never record a failed op's (possibly near-zero) timing —

@@ -24,13 +24,22 @@ CORRECTNESS row next sweep.
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from pyspark.sql.types import ArrayType, DecimalType, MapType, StructType
 
-from ocdb_server_spark.registry import load_all
+from ocdb_server_spark.registry import REGISTRY, load_all
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+import sweep_order  # noqa: E402  (the certification bookkeeping script)
 
 OPS = load_all()
+ROOT = sweep_order.ROOT
 
 # Ops whose fn performs eager work at build time (streaming
 # availableNow runs, sink roundtrips). Their schemas are still checked —
@@ -43,7 +52,7 @@ def test_row_is_green_predicate():
     ERRORED must not count as certified — else a fixed op sorts behind
     every never-swept op and, under the ~50-entry budget, is never
     re-checked (op96/op107 sat on stale r1 crash rows for two rounds)."""
-    from ocdb_server_spark.registry import _row_is_green
+    from sweep_order import _row_is_green
 
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -76,9 +85,7 @@ def test_sweep_order_fronts_errored_ops(tmp_path):
     All three non-green ops must sort before every certified op, and a
     later round's row must override an earlier one in both directions.
     """
-    import json
-
-    from ocdb_server_spark.registry import _sweep_order
+    from sweep_order import _sweep_order
 
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -108,7 +115,7 @@ def test_sweep_order_fronts_errored_ops(tmp_path):
     # certified ops despite registration order.
     keys = ["op_fresh", "op_green", "op_rows", "op_crash", "op_flip",
             "op_virgin", "op_late"]
-    ordered = _sweep_order(keys, root=str(tmp_path))
+    ordered = _sweep_order(keys, str(tmp_path), OPS)
 
     front = {"op_crash", "op_flip", "op_virgin"}
     back = {"op_green", "op_rows", "op_late", "op_fresh"}
@@ -128,11 +135,8 @@ def test_sweep_order_demotes_oracle_upgraded_ops(tmp_path):
     uncertified front group. A genuinely ROWS-only op (oracle=None)
     with the same row shape stays certified. Uses REAL registry keys
     because the rule consults the live REGISTRY's oracle field."""
-    import json
+    from sweep_order import _sweep_order
 
-    from ocdb_server_spark.registry import REGISTRY, _sweep_order, load_all
-
-    load_all()
     sql_op = "op17_agg_groupby"          # has an oracle today
     rows_op = "op20_agg_approx_count_distinct"  # oracle=None by design
     assert REGISTRY[sql_op].oracle is not None
@@ -151,7 +155,7 @@ def test_sweep_order_demotes_oracle_upgraded_ops(tmp_path):
         rows_op: green_rows,  # green under its designed check
         "op_other": green_sql,
     }))
-    ordered = _sweep_order([rows_op, "op_other", sql_op], root=str(tmp_path))
+    ordered = _sweep_order([rows_op, "op_other", sql_op], str(tmp_path), OPS)
     assert ordered[0] == sql_op, (
         f"oracle-upgraded op must re-certify first: {ordered}"
     )
@@ -166,16 +170,8 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     the self-maintenance path: a book whose fp no longer matches the
     registered oracle is refreshed in-place (since_round = latest
     recorded round + 1) before the demotion check."""
-    import json
+    from sweep_order import _oracle_fp, _sweep_order, certified_rounds
 
-    from ocdb_server_spark.registry import (
-        REGISTRY,
-        _oracle_fp,
-        _sweep_order,
-        load_all,
-    )
-
-    load_all()
     sql_op = "op17_agg_groupby"
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -186,14 +182,14 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     )
     fpdir = tmp_path / "ocdb_server_spark"
     fpdir.mkdir()
-    cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
+    cur_fp = _oracle_fp(OPS[sql_op].oracle)
 
     # Case 1: book says the current text went live AFTER the green row
     # → demoted to the front.
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": 4}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = _sweep_order(["op_other", sql_op], str(tmp_path), OPS)
     assert ordered[0] == sql_op, f"rewritten oracle must re-certify first: {ordered}"
 
     # Case 2: same book but the green row postdates the rewrite → stays
@@ -201,31 +197,31 @@ def test_sweep_order_demotes_rewritten_oracles(tmp_path):
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": 3}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
-    from ocdb_server_spark.registry import certified_rounds
-
-    assert sql_op in certified_rounds(str(tmp_path))
+    ordered = _sweep_order(["op_other", sql_op], str(tmp_path), OPS)
+    assert sql_op in certified_rounds(str(tmp_path), OPS)
 
     # Case 3: the book's fp is STALE (oracle edited, updater never ran)
-    # — refresh_oracle_fps must self-heal: rewrite the entry with
+    # — refresh_oracle_fps must heal: main() rewrites the entry with
     # since_round = latest+1 (=4) and the demotion then fires.
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": "0" * 16, "since_round": 1}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = _sweep_order(["op_other", sql_op], str(tmp_path), OPS)
     assert ordered[0] == sql_op, f"stale-fp op must re-certify first: {ordered}"
+    sweep_order.main(str(tmp_path))
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op]["fp"] == cur_fp
     assert healed[sql_op]["since_round"] == 4
 
     # Case 4 (round-10 review): a MALFORMED entry — fp correct but
     # since_round null (hand-edit / merge mangle) — must be healed,
-    # never crash the registry (iter_correctness_rounds' own rule).
+    # never crash the fold (iter_correctness_rounds' own rule).
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": None}})
     )
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = _sweep_order(["op_other", sql_op], str(tmp_path), OPS)
     assert ordered[0] == sql_op, f"healed op must re-certify first: {ordered}"
+    sweep_order.main(str(tmp_path))
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op]["since_round"] == 4
 
@@ -237,17 +233,10 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
     — its old rows-green gated a DIFFERENT snapshot. Mirrors
     test_sweep_order_demotes_rewritten_oracles with the snapshot file
     as the fingerprinted text."""
-    import json
+    from sweep_order import _sweep_order, certified_rounds
 
-    from ocdb_server_spark.registry import (
-        _sweep_order,
-        certified_rounds,
-        load_all,
-    )
-
-    ops = load_all()
     rows_op = "op194_minhash_rollup"
-    assert ops[rows_op].oracle is None  # stays ROWS-only by design
+    assert OPS[rows_op].oracle is None  # stays ROWS-only by design
     green_rows = {
         "rows_match": None, "schema_match": None, "hash_match": None,
         "spark_rows": 5, "oracle_rows": None, "err": "no_oracle",
@@ -278,7 +267,7 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({rows_op: {"fp": cur_fp, "since_round": 2}})
     )
-    assert rows_op in certified_rounds(str(tmp_path))
+    assert rows_op in certified_rounds(str(tmp_path), OPS)
 
     # Case 2: the snapshot entry is REWRITTEN (regenerated after a
     # semantics change) — refresh must heal the book (since_round =
@@ -286,10 +275,11 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
     (tdir / "rows_snapshot_sf0.001.json").write_text(
         json.dumps({rows_op: {**snap_entry, "hash": "deadbeef"}})
     )
-    ordered = _sweep_order(["op_other", rows_op], root=str(tmp_path))
+    ordered = _sweep_order(["op_other", rows_op], str(tmp_path), OPS)
     assert ordered[0] == rows_op, (
         f"rewritten-snapshot op must re-certify first: {ordered}"
     )
+    sweep_order.main(str(tmp_path))
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[rows_op]["since_round"] == 4
     assert healed[rows_op]["fp"] != cur_fp
@@ -301,7 +291,8 @@ def test_sweep_order_demotes_rewritten_rows_snapshots(tmp_path):
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({rows_op: {"fp": cur_fp, "since_round": 2}})
     )
-    assert rows_op in certified_rounds(str(tmp_path))
+    assert rows_op in certified_rounds(str(tmp_path), OPS)
+    sweep_order.main(str(tmp_path))
     kept = json.loads((fpdir / "oracle_fp.json").read_text())
     assert kept[rows_op] == {"fp": cur_fp, "since_round": 2}
 
@@ -337,19 +328,10 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     matches the registered plan demotes to the front and heals with
     since_round = latest+1, no hand-bump; (3) a matching src_fp is a
     no-op."""
-    import json
+    from sweep_order import _oracle_fp, _sweep_order, certified_rounds, src_fp
 
-    from ocdb_server_spark.registry import (
-        REGISTRY,
-        _oracle_fp,
-        _sweep_order,
-        certified_rounds,
-        load_all,
-    )
-
-    load_all()
     sql_op = "op17_agg_groupby"
-    assert REGISTRY[sql_op].src_fp, "registration must fingerprint the source"
+    assert src_fp(OPS[sql_op]), "the plan source must be fingerprinted"
     green_sql = {
         "rows_match": True, "schema_match": True, "hash_match": True,
         "spark_rows": 5, "oracle_rows": 5, "err": None,
@@ -359,14 +341,15 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     )
     fpdir = tmp_path / "ocdb_server_spark"
     fpdir.mkdir()
-    cur_fp = _oracle_fp(REGISTRY[sql_op].oracle)
-    cur_src = REGISTRY[sql_op].src_fp
+    cur_fp = _oracle_fp(OPS[sql_op].oracle)
+    cur_src = src_fp(OPS[sql_op])
 
     # Case 1: legacy entry (no src_fp) — adopted in place, NOT demoted.
     (fpdir / "oracle_fp.json").write_text(
         json.dumps({sql_op: {"fp": cur_fp, "since_round": 2}})
     )
-    assert sql_op in certified_rounds(str(tmp_path))
+    assert sql_op in certified_rounds(str(tmp_path), OPS)
+    sweep_order.main(str(tmp_path))
     migrated = json.loads((fpdir / "oracle_fp.json").read_text())
     assert migrated[sql_op] == {
         "fp": cur_fp, "since_round": 2, "src_fp": cur_src,
@@ -378,10 +361,11 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     (fpdir / "oracle_fp.json").write_text(json.dumps(
         {sql_op: {"fp": cur_fp, "since_round": 2, "src_fp": "0" * 16}}
     ))
-    ordered = _sweep_order(["op_other", sql_op], root=str(tmp_path))
+    ordered = _sweep_order(["op_other", sql_op], str(tmp_path), OPS)
     assert ordered[0] == sql_op, (
         f"plan-rewritten op must re-certify first: {ordered}"
     )
+    sweep_order.main(str(tmp_path))
     healed = json.loads((fpdir / "oracle_fp.json").read_text())
     assert healed[sql_op] == {
         "fp": cur_fp, "since_round": 4, "src_fp": cur_src,
@@ -391,7 +375,8 @@ def test_sweep_order_demotes_rewritten_plan_source(tmp_path):
     (fpdir / "oracle_fp.json").write_text(json.dumps(
         {sql_op: {"fp": cur_fp, "since_round": 2, "src_fp": cur_src}}
     ))
-    assert sql_op in certified_rounds(str(tmp_path))
+    assert sql_op in certified_rounds(str(tmp_path), OPS)
+    sweep_order.main(str(tmp_path))
     kept = json.loads((fpdir / "oracle_fp.json").read_text())
     assert kept[sql_op]["since_round"] == 2
 
@@ -413,9 +398,6 @@ def test_register_deps_fold_into_src_fp():
         cdc_changes_feed,
         op264_cdc_apply_changes,
     )
-    from ocdb_server_spark.registry import REGISTRY, load_all
-
-    load_all()
     # the live registration folds the declared kernels: recompute the
     # expected hash from the unwrapped fn + its declared deps
     fn = inspect.unwrap(op264_cdc_apply_changes)
@@ -425,7 +407,7 @@ def test_register_deps_fold_into_src_fp():
     src += inspect.getsource(cdc_changes_feed)
     src += inspect.getsource(cdc_base_snapshot)
     expected = hashlib.sha256(src.encode()).hexdigest()[:16]
-    assert REGISTRY["op264_cdc_apply_changes"].src_fp == expected
+    assert sweep_order.src_fp(OPS["op264_cdc_apply_changes"]) == expected
     # and WITHOUT the deps the fingerprint differs — so a helper edit
     # is guaranteed to move the registered fingerprint
     bare = hashlib.sha256(
@@ -442,7 +424,7 @@ def test_register_deps_fold_into_src_fp():
     exp183 = hashlib.sha256(
         (inspect.getsource(fn183) + inspect.getsource(bm25_scored_docs)).encode()
     ).hexdigest()[:16]
-    assert REGISTRY["op183_bm25_topk"].src_fp == exp183
+    assert sweep_order.src_fp(OPS["op183_bm25_topk"]) == exp183
 
 
 def test_backup_correctness_files_are_skipped(tmp_path):
@@ -450,9 +432,7 @@ def test_backup_correctness_files_are_skipped(tmp_path):
     digits ('1' + '2' → round 12) and override genuine round-12 rows.
     Only fully-numeric round tails are driver records — anything else
     is a backup/rename and must not fold as evidence."""
-    import json
-
-    from ocdb_server_spark.registry import iter_correctness_rounds
+    from sweep_order import iter_correctness_rounds
 
     green = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -470,10 +450,8 @@ def test_backup_correctness_files_are_skipped(tmp_path):
 def test_sweep_order_survives_malformed_op_costs(tmp_path):
     """Round-13 review: a list-shaped or string-valued op_costs.json
     crashed load_all() — and with it every driver entry point. The
-    registry's own rule: a malformed book never breaks the registry."""
-    import json
-
-    from ocdb_server_spark.registry import _sweep_order
+    fold's own rule: a malformed book never breaks the fold."""
+    from sweep_order import _sweep_order
 
     green = {
         "rows_match": True, "schema_match": True, "hash_match": True,
@@ -483,11 +461,11 @@ def test_sweep_order_survives_malformed_op_costs(tmp_path):
     pkg = tmp_path / "ocdb_server_spark"
     pkg.mkdir()
     (pkg / "op_costs.json").write_text(json.dumps(["not", "a", "dict"]))
-    assert _sweep_order(["op_a", "op_b"], root=str(tmp_path))  # no crash
+    assert _sweep_order(["op_a", "op_b"], str(tmp_path), OPS)  # no crash
     (pkg / "op_costs.json").write_text(
         json.dumps({"op_a": "NaN-ish string", "op_b": 0.5})
     )
-    ordered = _sweep_order(["op_a", "op_b"], root=str(tmp_path))
+    ordered = _sweep_order(["op_a", "op_b"], str(tmp_path), OPS)
     assert set(ordered) == {"op_a", "op_b"}
 
 
@@ -495,7 +473,7 @@ def test_unhashable_dep_does_not_zero_plan_fingerprint():
     """Round-13 review: one source-less dep (builtin/C extension) used
     to zero the op's src_fp, silently disabling plan-rewrite demotion
     for the whole op."""
-    from ocdb_server_spark.registry import REGISTRY, register
+    from ocdb_server_spark.registry import register
 
     name = "op_test_unhashable_dep"
     try:
@@ -503,6 +481,88 @@ def test_unhashable_dep_does_not_zero_plan_fingerprint():
         def op_test_unhashable_dep(spark, sf_dir):  # pragma: no cover
             raise NotImplementedError
 
-        assert REGISTRY[name].src_fp != ""
+        assert sweep_order.src_fp(REGISTRY[name]) != ""
     finally:
         REGISTRY.pop(name, None)
+
+
+
+def test_load_all_fronts_ops_missing_from_the_order():
+    """An op that op_order.json does not list is new, so uncertified:
+    load_all() puts it first and keeps the committed order after it."""
+    from ocdb_server_spark.registry import register
+
+    name = "op_test_unlisted"
+    try:
+        @register(name)
+        def op_test_unlisted(spark, sf_dir):  # pragma: no cover
+            raise NotImplementedError
+
+        assert list(load_all()) == [name, *OPS]
+    finally:
+        REGISTRY.pop(name, None)
+
+def test_sweep_order_books_are_fresh():
+    """The committed books are what the fold makes of the committed
+    evidence: editing an op, a declared dep, an oracle or the rows
+    snapshot (or landing a CORRECTNESS/op_costs file) without re-running
+    the script fails here, so queries() never serves a stale order.
+    Folds in a fresh interpreter, as the script runs: registration order
+    is the order's tie-break, and this process imported operator
+    modules in its own order."""
+    code = (
+        "import json, sweep_order; "
+        "print(json.dumps(sweep_order.books(sweep_order.ROOT)))"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.join(ROOT, "scripts"),
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    for rel, text in json.loads(res.stdout).items():
+        with open(os.path.join(ROOT, rel)) as f:
+            assert f.read() == text, (
+                f"{rel} is stale: run `python scripts/sweep_order.py` "
+                "and commit both books"
+            )
+
+
+def test_load_all_skips_certification_bookkeeping(tmp_path):
+    """A fresh load_all() reads the committed sweep order and nothing of
+    the certification evidence, and writes no file: the fold and the
+    fingerprint book live in scripts/sweep_order.py only."""
+    code = """
+import json, os, sys
+events = []
+sys.addaudithook(
+    lambda ev, args: events.append([str(args[0]), args[1], args[2]])
+    if ev == "open" else None
+)
+from ocdb_server_spark.registry import load_all
+load_all()
+print(json.dumps(events))
+"""
+    res = subprocess.run(
+        [sys.executable, "-B", "-c", code],
+        cwd=str(tmp_path),
+        env={**os.environ, "PYTHONPATH": ROOT},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    events = json.loads(res.stdout.splitlines()[-1])
+    names = [os.path.basename(path) for path, _, _ in events]
+    assert "op_order.json" in names  # the hook sees the registry's reads
+    banned = {"oracle_fp.json", "op_costs.json", "rows_snapshot_sf0.001.json"}
+    read = [n for n in names if n in banned or n.startswith("CORRECTNESS_r")]
+    assert read == [], f"load_all() read certification books: {read}"
+    write_flags = os.O_WRONLY | os.O_RDWR | os.O_CREAT | os.O_APPEND | os.O_TRUNC
+    written = [
+        path
+        for path, mode, flags in events
+        if (isinstance(mode, str) and set(mode) & set("wax+"))
+        or (isinstance(flags, int) and flags & write_flags)
+    ]
+    assert written == [], f"load_all() opened files for writing: {written}"
